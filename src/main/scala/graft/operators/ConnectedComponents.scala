@@ -96,9 +96,10 @@ object ConnectedComponents {
     def persistEager(df: DataFrame, round: Int): DataFrame
     def releaseFinal(): Unit
     /** Called instead of releaseFinal when the fixpoint gives up
-      * (maxIter). Default: free everything. A caller-owned resumable
-      * store overrides to KEEP its files — the committed rounds are
-      * exactly what lets the caller resume with a higher maxIter. */
+      * (maxIter) or a round throws. Default: free everything. A
+      * caller-owned resumable store overrides to KEEP its files — the
+      * committed rounds are exactly what lets the caller resume (with a
+      * higher maxIter, or after the failure). */
     def abandon(): Unit = releaseFinal()
   }
 
@@ -450,6 +451,13 @@ object ConnectedComponents {
       roundCaches = Nil
       labels = round.select("node", "comp")
     }
+    } catch {
+      case t: Throwable =>
+        // a round that throws leaves its staged checkpoint and the
+        // previous round's storage in the store; abandon frees them (a
+        // resumable store keeps its committed rounds to resume from)
+        store.abandon()
+        throw t
     } finally {
       // release everything cached even when a round throws — a failed
       // fixpoint must not pin MEMORY_AND_DISK blocks for the session

@@ -53,7 +53,41 @@ object Icebergish {
       .parquet(dir)
 
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    resolve(spark, dir)(spark.read.parquet(dir))
+
+  /** Whether a table on a file system with this scheme is listed on the
+    * driver, one directory after another, instead of by a Spark listing
+    * job (one task per bucket dir past Spark's 32-dir threshold). On the
+    * local file system the driver lists 256 bucket dirs in milliseconds,
+    * less than the job's start-up alone; a remote object store keeps
+    * Spark's parallel listing. */
+  def listsOnDriver(scheme: String): Boolean = scheme == "file"
+
+  private val DiscoveryThreshold =
+    "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+  /** Runs `body`, a parquet read of `dir`, with the listing mode
+    * `listsOnDriver` picks for dir's file system. Spark reads the
+    * discovery threshold while the relation resolves, inside `body`, so
+    * the raised value lives only that long; the caller's value — or its
+    * absence — is restored even when the read throws. The threshold
+    * changes how the file index lists, never what it returns. Reads are
+    * serialized here so two threads cannot restore each other's value. */
+  private def resolve(spark: SparkSession, dir: String)(
+      body: => DataFrame): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!listsOnDriver(fs.getScheme)) body
+    else synchronized {
+      val caller = spark.conf.getAll.get(DiscoveryThreshold)
+      spark.conf.set(DiscoveryThreshold, Int.MaxValue.toLong)
+      try body
+      finally caller match {
+        case Some(v) => spark.conf.set(DiscoveryThreshold, v)
+        case None => spark.conf.unset(DiscoveryThreshold)
+      }
+    }
+  }
 
   // ---------------- manifest ----------------
 
@@ -77,7 +111,7 @@ object Icebergish {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) spark.emptyDataFrame.selectExpr()
       .withColumn("bucket", lit(0)).limit(0)
-    else spark.read.parquet(manifestDir(dir))
+    else read(spark, manifestDir(dir))
       .where(col("stage") === stage)
       .select("bucket").distinct()
   }
@@ -108,8 +142,11 @@ object Icebergish {
       System.nanoTime()
     }
     var t = t0
-    // count on the partition column only — no html bytes read
-    val nPages = todo.select("bucket").count()
+    // one scan of the partition column (no html bytes read) gives both the
+    // page count and this run's bucket list; the manifest is appended only
+    // after the write, so the list cannot change in between
+    val pagesPerBucket = todo.groupBy("bucket").count().collect()
+    val nPages = pagesPerBucket.map(_.getLong(1)).sum
     t = mark("resume-count", t)
     if (nPages == 0) return 0L
     // The OUTPUT modulus must match the pages table's ingestion-time
@@ -142,7 +179,8 @@ object Icebergish {
     // triples are bucket-local (same url hash as their page, and the pages
     // scan is bucket-partitioned) → the write needs NO shuffle
     val out = withBucket(triples.toDF(), numBuckets)
-    writeColocated(out, s"$outDir/triples")
+    val triplesDir = s"$outDir/triples"
+    writeColocated(out, triplesDir)
     t = mark("map+write", t)
 
     val wallMs = (System.nanoTime() - t0) / 1000000L
@@ -150,7 +188,7 @@ object Icebergish {
     // data: bytes per bucket from the file listing; rows + watermark from
     // a pruned (bucket, warc_ts) columnar read of what was just written.
     val bytesByBucket = {
-      val base = new org.apache.hadoop.fs.Path(s"$outDir/triples")
+      val base = new org.apache.hadoop.fs.Path(triplesDir)
       val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.listStatus(base).filter(_.getPath.getName.startsWith("bucket="))
         .map { d =>
@@ -162,14 +200,13 @@ object Icebergish {
     // restrict to THIS run's buckets — the output dir also holds buckets
     // from earlier runs, which must not get duplicate manifest rows; the
     // isin filter partition-prunes the stats read to the new dirs
-    val todoBucketList = todo.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val todoBucketList = pagesPerBucket.map(_.getInt(0)).sorted.toSeq
     // explicit schema: a first run whose EVERY bucket produced zero
     // triples leaves no parquet footers to infer from, and an inference
     // crash here would land before appendManifest — a permanent
     // reprocess-and-crash loop instead of rows=0 manifest entries
-    val perBucket = spark.read.schema(out.schema)
-      .parquet(s"$outDir/triples")
+    val perBucket = resolve(spark, triplesDir)(
+        spark.read.schema(out.schema).parquet(triplesDir))
       .where(col("bucket").isin(todoBucketList: _*))
       .groupBy("bucket").agg(
         max(col("warc_ts")).as("watermark"),

@@ -37,12 +37,16 @@ final case class TripleIdRow(subjId: Long, pred: String, objId: Long,
   *     of the candidate-generation broadcast hash join; see
   *     `stagedTriples` for the Catalyst BroadcastHashJoinExec variant that
   *     tests cross-check against this path).
-  *   - canonicalization runs connected components on the ENTITY graph
-  *     (tiny relative to pages) and broadcasts the resulting
-  *     entity→canonical map into the same narrow stage.
-  *   - the only wide exchange is the final repartition by url-hash bucket
-  *     for the partitioned write (north_rule: range-partitioned shuffles by
-  *     url-hash), plus the manifest aggregation (one row per bucket).
+  *   - canonicalization finds connected components of the same-as ENTITY
+  *     graph (tiny relative to pages) with a union-find on the driver, over
+  *     the entity and alias rows `prepare` already collects for the model,
+  *     and broadcasts the resulting entity→canonical map into the same
+  *     narrow stage. Only an entity table too big to broadcast
+  *     (`runWithJoinedCanon`) takes the distributed CC fixpoint.
+  *   - the KG call itself has no page-volume exchange: triples inherit
+  *     their page's url-hash bucket, so the partitioned write is colocated
+  *     (north_rule: range-partitioned shuffles by url-hash, paid once at
+  *     ingest); the manifest aggregation is one row per bucket.
   */
 object KgPipeline {
 
@@ -79,30 +83,24 @@ object KgPipeline {
   }
 
   /** entity_id → canonical surface of its component representative
-    * (min entity_id), via the distributed CC fixpoint.
+    * (min entity_id), via the distributed CC fixpoint — the path for an
+    * entity table too big for the driver (`runWithJoinedCanon`);
+    * `canonicalOf` is its driver twin.
     *
     * @param hugeEntities when the entity table is too big to broadcast,
     *   the representative lookup runs as a sort-merge join instead */
   def canonicalMap(spark: SparkSession, entities: DataFrame,
-      aliases: DataFrame, hugeEntities: Boolean = false): DataFrame =
-    canonicalMapManaged(spark, entities, aliases, hugeEntities)._1
-
-  /** As `canonicalMap`, also returning the CC run handle so a caller that
-    * fully consumes the map (e.g. `prepare`'s collect) can free the
-    * fixpoint's temp files immediately instead of at JVM shutdown. */
-  def canonicalMapManaged(spark: SparkSession, entities: DataFrame,
-      aliases: DataFrame, hugeEntities: Boolean = false)
-      : (DataFrame, ConnectedComponents.CcHandle) = {
-    val cc = ConnectedComponents.runManaged(spark, sameAsEdges(aliases))
+      aliases: DataFrame, hugeEntities: Boolean = false): DataFrame = {
+    val labels = ConnectedComponents.run(spark, sameAsEdges(aliases))
     // `labeled` is referenced twice below (repIds and the final join) and
-    // deliberately NOT persisted: cc.labels is backed by the fixpoint's
-    // final-round parquet, so each reference re-derives only a parquet
-    // scan + one dimension-sized join — NOT the CC fixpoint itself. A
+    // deliberately NOT persisted: the labels are backed by the fixpoint's
+    // final-round checkpoint, so each reference re-derives only a scan of
+    // it + one dimension-sized join — NOT the CC fixpoint itself. A
     // persist here would have no sound unpersist point (the returned
     // DataFrame is lazy; consumers run after this method exits) and would
     // pin a dimension-sized cache entry per call in a long-lived driver.
     val labeled = entities
-      .join(cc.labels.withColumnRenamed("node", "entity_id"),
+      .join(labels.withColumnRenamed("node", "entity_id"),
         Seq("entity_id"), "left_outer")
       .withColumn("comp", coalesce(col("comp"), col("entity_id")))
     // The representative is the min entity id that EXISTS in the entity
@@ -115,10 +113,30 @@ object KgPipeline {
         col("canonical").as("comp_canonical")), Seq("rep_id"))
       .select(col("comp"), col("comp_canonical"))
     val repsSide = if (hugeEntities) reps.hint("merge") else broadcast(reps)
-    val out = labeled
+    labeled
       .join(repsSide, Seq("comp"))
       .select(col("entity_id"), col("comp"), col("comp_canonical"))
-    (out, cc)
+  }
+
+  /** `canonicalMap` on the driver, over rows already collected:
+    * (entity_id, canonical, cls) and (alias, entity_id, prior). Same-as
+    * components come from a union-find over the aliases that share a
+    * surface with prior ≥ 0.8; each entity maps to the canonical of its
+    * component's min EXISTING entity id (a dangling alias id links
+    * entities but represents none). The filter keeps Spark SQL's
+    * semantics so the two paths agree row for row: NaN ranks above every
+    * number (NaN ≥ 0.8 holds), and a null surface matches nothing. */
+  private def canonicalOf(entities: Seq[(Long, String, String)],
+      aliases: Seq[(String, Long, Double)]): Map[Long, String] = {
+    val uf = new UnionFind
+    aliases.filter(a => a._1 != null && (a._3.isNaN || a._3 >= 0.8))
+      .groupBy(_._1).valuesIterator.foreach { same =>
+        same.foreach(a => uf.union(same.head._2, a._2))
+      }
+    val comp = entities.map(e => e._1 -> uf.find(e._1))
+    val rep = comp.groupMapReduce(_._2)(_._1)(math.min)
+    val canonical = entities.map(e => e._1 -> e._2).toMap
+    comp.map { case (id, c) => id -> canonical(rep(c)) }.toMap
   }
 
   // ---------------- fused narrow stages ----------------
@@ -202,27 +220,20 @@ object KgPipeline {
   }
 
   /** The broadcastable, page-count-independent part of the job: linking
-    * model + connected-components canonical map. O(|entities|+|aliases|);
-    * at 10^12 documents this is a fixed cost amortized to zero, so callers
-    * that process many batches (bench, resume loops) build it once. */
+    * model + canonical map, both built on the driver from one collect of
+    * each table (`canonicalOf`; no Spark job beyond the collects).
+    * O(|entities|+|aliases|); at 10^12 documents this is a fixed cost
+    * amortized to zero, so callers that process many batches (bench,
+    * resume loops) build it once. */
   final case class Prepared(model: Model, canon: Map[Long, String])
-
-  private def collectModel(entities: DataFrame, aliases: DataFrame): Model =
-    buildModel(
-      entities.select("entity_id", "canonical", "cls").collect().toVector
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))),
-      aliases.select("alias", "entity_id", "prior").collect().toVector
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))))
 
   def prepare(spark: SparkSession, entities: DataFrame,
       aliases: DataFrame): Prepared = {
-    val model = collectModel(entities, aliases)
-    val (cmap, cc) = canonicalMapManaged(spark, entities, aliases)
-    val canon =
-      try cmap.select("entity_id", "comp_canonical").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      finally cc.close() // collect fully consumed the fixpoint's files
-    Prepared(model, canon)
+    val ents = entities.select("entity_id", "canonical", "cls").collect()
+      .toVector.map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    val als = aliases.select("alias", "entity_id", "prior").collect()
+      .toVector.map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    Prepared(buildModel(ents, als), canonicalOf(ents, als))
   }
 
   /** End-to-end: build model + canonical map from the entity/alias tables,

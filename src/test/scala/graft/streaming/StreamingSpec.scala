@@ -222,7 +222,10 @@ class StreamingSpec extends SparkTestBase {
       .writeStream.format("memory").queryName("hh_evict")
       .outputMode("update").start()
     q.processAllAvailable()
-    docs.where(col("doc_id") >= 200)
+    // one file, so the running query sees the second half in ONE trigger:
+    // a multi-file append is committed file by file, and a poll between
+    // two renames splits it over two triggers
+    docs.where(col("doc_id") >= 200).coalesce(1)
       .write.mode("append").parquet(s"$tmp/docs")
     q.processAllAvailable()
     q.stop()
